@@ -41,3 +41,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture()
+def workspace(tmp_path):
+    """Paths of one incremental pipeline: raw report dir, state store,
+    warehouse and audit log."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    return {
+        "raw": str(raw),
+        "state": str(tmp_path / "state.json"),
+        "warehouse": str(tmp_path / "warehouse.parquet"),
+        "log": str(tmp_path / "log.parquet"),
+    }

@@ -35,18 +35,6 @@ def _write_raw(dirpath: str, code: str, ts: str, n_rows: int) -> None:
             )
 
 
-@pytest.fixture()
-def workspace(tmp_path):
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    return {
-        "raw": str(raw),
-        "state": str(tmp_path / "state.json"),
-        "warehouse": str(tmp_path / "warehouse.parquet"),
-        "log": str(tmp_path / "log.parquet"),
-    }
-
-
 def _available(spark, rows):
     return spark.createDataFrame(rows, ["key", "last_seen_ts"])
 

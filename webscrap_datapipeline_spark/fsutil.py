@@ -14,6 +14,8 @@ absent.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import SparkSession
 
 
@@ -60,6 +62,19 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
             "not a rename)"
         )
     return bool(fs.rename(jsrc, fs.makeQualified(jdst)))
+
+
+def fs_replace(spark: SparkSession, staging: str, path: str) -> None:
+    """Publish a fully written ``staging`` dir as ``path``: move the
+    current ``path`` aside, rename ``staging`` into place, then delete
+    the old copy. Readers see the old data or the new, never a partial
+    write (on filesystems whose rename is atomic, see ``fs_rename``)."""
+    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
+    if fs_exists(spark, path) and not fs_rename(spark, path, old):
+        raise OSError(f"could not move {path!r} aside to {old!r}")
+    if not fs_rename(spark, staging, path):
+        raise OSError(f"could not rename {staging!r} to {path!r}")
+    fs_delete(spark, old)
 
 
 def fs_write_text(spark: SparkSession, path: str, text: str) -> None:

@@ -9,19 +9,34 @@ reference's main() (main.py:30-112, traced in SURVEY.md §3.1):
   audit log append                                      │
   state commit (ONLY after loads succeed — ST2)  ←──────┘
 
-Two actions total (warehouse write, log write) + one small state write;
-everything between is one lazy DAG. The scrape result is cached before
-use so Spark's recompute-on-failure can't re-fire side effects.
+A delta cycle's work follows the changed hotels, not the history:
+
+  * scans: the changed keys are collected once (the cycle's first
+    job); the raw scan is one root directory listed on the driver, and
+    the ``LOC_ID IN (keys)`` filter prunes it to the changed hotels'
+    files when it is planned (the reference downloads only those files,
+    src/web_scrape.py:125). The log and the state read the new
+    warehouse's current rows through the same filter.
+  * rewrites: the warehouse is rewritten whole (it is one flat table),
+    but only the changed hotels' rows are re-deduplicated and
+    re-flagged (the reference's UPDATE de-flags only those hotels,
+    src/gcp_processes.py:29-47); the other hotels' rows pass through
+    unchanged, with no shuffle.
+  * runs: three writes (warehouse, log, state) plus the key collect,
+    one warehouse schema read and the row count.
+
+The changed frame is cached before use so Spark's recompute-on-failure
+can't re-fire side effects.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fsutil import fs_exists, fs_replace
 from .operators.change_detection import detect_changes, update_state
 from .operators.enrich import enrich_reports
 from .operators.log_table import build_log_table
@@ -51,19 +66,20 @@ def run_incremental(
 ) -> PipelineResult:
     """One incremental cycle. ``available`` is the already-fetched source
     listing (the scrape scaffold produces it in production; tests build it
-    directly — the pipeline is pure downstream of it)."""
+    directly — the pipeline is pure downstream of it). ``raw_glob`` is
+    ``<dir>/<file-name pattern>`` (see ``read_raw_reports``)."""
     state = read_state(spark, state_path)
     changed = detect_changes(available, state, "key", "last_seen_ts").cache()
-    n_changed = changed.count()
-    if n_changed == 0:
+    keys = [r.key for r in changed.select("key").collect()]
+    if not keys:
+        changed.unpersist()
         return PipelineResult(0, 0, 0)  # early-exit (reference main.py:58-59)
+    # NULL-safe: a row with no LOC_ID is never part of the delta
+    in_delta = F.coalesce(F.col("LOC_ID").isin(keys), F.lit(False))
 
-    # Enrich every fetched raw file in one scan; restrict to changed keys
-    # (semi-join — the reference restricts by only downloading changed files).
-    raw = read_raw_reports(spark, raw_glob)
-    enriched = enrich_reports(raw).join(
-        F.broadcast(changed.select(F.col("key").alias("LOC_ID"))), "LOC_ID", "left_semi"
-    )
+    # Enrich the changed hotels' raw files in one scan; the key filter
+    # prunes the other hotels' files when the scan is planned.
+    enriched = enrich_reports(read_raw_reports(spark, raw_glob)).filter(in_delta)
 
     # Optional row quarantine (ST4 generalized): rule violations leave
     # the load path as DATA (reprocessable, with reasons) instead of
@@ -77,19 +93,24 @@ def run_incremental(
         else:
             n_quarantined = bad.count()
 
-    # Warehouse append with SCD current-flag maintenance (K5+K3).
-    if os.path.exists(warehouse_path):
+    # Warehouse append with SCD current-flag maintenance (K5+K3). The
+    # flag and the exact-duplicate collapse are both per key, so only the
+    # changed hotels' slice is recomputed; the rest is copied through.
+    if fs_exists(spark, warehouse_path):
         existing = spark.read.parquet(warehouse_path)
+        touched = existing.filter(in_delta)
         # ingest only files not already loaded (the reference relied on
         # emptying its raw dir each run, K6; lineage anti-join replaces
         # that filesystem lifecycle and is replay-safe)
         enriched = enriched.join(
-            existing.select("LOC_ID", "SRC_FILENAME").distinct(),
+            touched.select("LOC_ID", "SRC_FILENAME").distinct(),
             ["LOC_ID", "SRC_FILENAME"],
             "left_anti",
         )
-        merged = apply_current_flag(
-            existing, enriched, key="LOC_ID", ts="LST_UPDT_TS", tiebreak="SRC_FILENAME"
+        merged = existing.filter(~in_delta).unionByName(
+            apply_current_flag(
+                touched, enriched, key="LOC_ID", ts="LST_UPDT_TS", tiebreak="SRC_FILENAME"
+            )
         )
     else:
         merged = apply_current_flag(
@@ -97,26 +118,21 @@ def run_incremental(
         )
     tmp = warehouse_path + ".staging"
     merged.write.mode("overwrite").parquet(tmp)
-    _swap(warehouse_path, tmp)
-    loaded = spark.read.parquet(warehouse_path).count()
+    fs_replace(spark, tmp, warehouse_path)
+    # the schema just written: reading it back needs no footer job
+    warehouse = spark.read.schema(merged.schema).parquet(warehouse_path)
+    loaded = warehouse.count()
+    current = warehouse.filter((F.col("CURRENT_IND") == "Y") & in_delta)
 
     # Audit log (ST5): every changed key gets a row; keys whose file never
-    # arrived get the NULL row (J4 left-outer semantics).
-    log_df = build_log_table(
-        changed.select(F.col("key").alias("LOC_ID")),
-        spark.read.parquet(warehouse_path).filter(F.col("CURRENT_IND") == "Y"),
-    )
+    # arrived get the NULL row (J4 left-outer semantics). One row per
+    # distinct requested key, so the log holds len(keys) new rows.
+    log_df = build_log_table(changed.select(F.col("key").alias("LOC_ID")), current)
     log_df.write.mode("append").parquet(log_path)
-    n_log = log_df.count()
 
     # State commit LAST (ST2): only keys that made it into the warehouse
     # advance the watermark, so failures retry next cycle.
-    loaded_keys = (
-        spark.read.parquet(warehouse_path)
-        .filter(F.col("CURRENT_IND") == "Y")
-        .select(F.col("LOC_ID").alias("key"))
-        .distinct()
-    )
+    loaded_keys = current.select(F.col("LOC_ID").alias("key")).distinct()
     updates = changed.join(loaded_keys, "key", "left_semi").select("key", "last_seen_ts")
     new_state = update_state(
         state.withColumnRenamed("last_seen_ts", "ts_state"),
@@ -127,15 +143,4 @@ def run_incremental(
     commit_state(new_state, state_path)
 
     changed.unpersist()
-    return PipelineResult(n_changed, loaded, n_log, n_quarantined)
-
-
-def _swap(path: str, staging: str) -> None:
-    import shutil
-    import uuid
-
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+    return PipelineResult(len(keys), loaded, len(keys), n_quarantined)

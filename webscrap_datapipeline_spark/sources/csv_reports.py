@@ -4,14 +4,22 @@ location code and a timestamp (FIXTURES.md A1).
 
 Spark-first shape: ONE multi-file scan with an explicit schema replaces
 the reference's per-file read loop + concat; per-file lineage (the
-reference's per-file enrichment inputs) is recovered with
-input_file_name(), so the whole "read every file, enrich, union" stage
-is a single lazy plan with no intermediate materialization (the
-reference's ./data/processed hop existed only because pandas couldn't
-hold the union — README.md:46).
+reference's per-file enrichment inputs) is recovered from the file
+source's ``_metadata.file_path`` column, so the whole "read every file,
+enrich, union" stage is a single lazy plan with no intermediate
+materialization (the reference's ./data/processed hop existed only
+because pandas couldn't hold the union — README.md:46).
+
+Because ``_metadata.file_path`` is deterministic (``input_file_name()``
+is not), a filter on a column derived from it — the hotel code — is
+evaluated against the file listing when the scan is planned, and the
+scan opens only the matching files: the reference's download-only-the-
+changed-hotels IN-list (src/web_scrape.py:125) as file pruning.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,18 +50,32 @@ RAW_REPORT_SCHEMA = T.StructType(
 )
 
 
+_GLOB_CHARS = re.compile(r"[*?\[\]{}]")
+
+
 def read_raw_reports(
     spark: SparkSession, path_glob: str, schema: T.StructType = RAW_REPORT_SCHEMA
 ) -> DataFrame:
-    """Scan all raw pipe-delimited reports in one pass, attaching
-    per-file lineage as ``src_path``."""
-    return (
-        spark.read.option("sep", "|")
-        .option("header", True)
-        .schema(schema)
-        .csv(path_glob)
-        .withColumn("src_path", F.input_file_name())
-    )
+    """Scan the raw pipe-delimited reports matching ``path_glob``
+    (``<dir>/<file-name pattern>``, e.g. ``raw/*.csv``) in one pass,
+    attaching per-file lineage as ``src_path``.
+
+    The directory is read as ONE root path with the pattern as
+    ``pathGlobFilter``. A ``<dir>/*.csv`` root would expand to one root
+    path per file, and above ``spark.sql.sources.parallelPartitionDiscovery
+    .threshold`` (32) root paths Spark lists them with a Spark job every
+    time the frame is built. Wildcards above the last path component are
+    rejected: a pattern can only filter file names."""
+    parent, _, pattern = path_glob.rpartition("/")
+    if _GLOB_CHARS.search(parent):
+        raise ValueError(
+            f"read_raw_reports: {path_glob!r} has wildcards above its last path "
+            "component; pass '<dir>/<file-name pattern>'"
+        )
+    reader = spark.read.option("sep", "|").option("header", True).schema(schema)
+    if _GLOB_CHARS.search(pattern):
+        reader, path_glob = reader.option("pathGlobFilter", pattern), parent
+    return reader.csv(path_glob).withColumn("src_path", F.col("_metadata.file_path"))
 
 
 def write_reports(df: DataFrame, path: str, partition_col: str | None = "LOC_ID") -> None:

@@ -20,12 +20,12 @@ without the dependency:
 
 from __future__ import annotations
 
-import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..fsutil import fs_exists, fs_replace
 
 STATE_SCHEMA = T.StructType(
     [
@@ -38,7 +38,7 @@ STATE_SCHEMA = T.StructType(
 def read_state(spark: SparkSession, path: str) -> DataFrame:
     """Empty-state bootstrap: missing path → empty DataFrame (the
     reference crashes if the JSON is absent)."""
-    if not os.path.exists(path):
+    if not fs_exists(spark, path):
         return spark.createDataFrame([], STATE_SCHEMA)
     return spark.read.schema(STATE_SCHEMA).json(path)
 
@@ -50,9 +50,4 @@ def commit_state(state: DataFrame, path: str) -> None:
     """
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     state.coalesce(1).write.mode("overwrite").json(tmp)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
+    fs_replace(state.sparkSession, tmp, path)
